@@ -1,7 +1,7 @@
 package graft.api
 
 import java.sql.Timestamp
-import java.time.LocalDateTime
+import java.time.{LocalDate, LocalDateTime, YearMonth}
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -15,14 +15,21 @@ import graft.ingest.{Archives, AsciiGrid, GeoTiff, Regnie, Shp}
   * re-expressed as one lazy Spark plan:
   *
   *   binaryFile scan -> archive expand -> windowed raster parse (long rows)
-  *     -> broadcast-join basin/cell map -> NaN gate -> weights
-  *     -> groupBy(basinID, ts) weighted sum -> sinks
+  *     -> dedup (ts, row, col) -> broadcast-join basin/cell map -> NaN gate
+  *     -> weights -> groupBy(basinID, ts) weighted sum -> sinks
   *
   * The clip window is computed once from the first grid's header + basin
-  * bounds (reference X9/X1) and pushed into the parser as a row/col range, so
-  * tasks never materialize full 900x900 grids. The basin dimension is read
+  * bounds (reference X9/X1) and pushed into the parser as a row/col range.
+  * Files, nested archives and members whose name-carried date is outside
+  * the configured range are never inflated or parsed (the scan still reads
+  * the bytes of an out-of-range top-level file). Each task inflates
+  * its archive member by member; the parser skips rows outside the window
+  * by scanning for line breaks and decodes only the tokens inside it, so no
+  * full 900x900 grid of numbers is ever built. The basin dimension is read
   * driver-side (small shapefile), reprojected with closed-form CRS math, and
-  * broadcast. Scale notes: the raster side is never shuffled until the final
+  * broadcast. Scale notes: the dedup of input readings (on by default)
+  * shuffles the clipped window, never the raw raster; the other shuffles
+  * carry aggregates: the NaN gate's per-cell counts and the final
   * (basinID, ts) aggregation, whose cardinality is |basins| x |timestamps|.
   */
 object RadoHydro {
@@ -68,30 +75,74 @@ object RadoHydro {
   private def utcTs(ldt: LocalDateTime): Timestamp =
     Timestamp.from(ldt.toInstant(java.time.ZoneOffset.UTC))
 
+  /** Python's %y pivot: 69-99 -> 19xx, 00-68 -> 20xx (radohydro.py:434).
+    * Java's 'yy' (base 2000) would push 1999 data into 2099.
+    */
+  private def pivotYear(yy: Int): Int = if (yy >= 69) 1900 + yy else 2000 + yy
+
+  private def digitsOf(name: String): String = name.replaceAll("[^0-9]", "")
+
   /** Digits-concat filename timestamp parse (reference radohydro.py:64-78).
-    * REGNIE member names carry 2-digit years parsed with Python's %y pivot
-    * (69-99 -> 19xx, 00-68 -> 20xx; radohydro.py:434) — Java's 'yy' (base
-    * 2000) would push 1999 data into 2099.
+    * REGNIE member names carry 2-digit years parsed with the %y pivot.
     */
   def parseMemberTs(datasource: String, name: String): Timestamp = {
-    val digits = name.replaceAll("[^0-9]", "")
+    val digits = digitsOf(name)
     datasource match {
       case "radolan" =>
         utcTs(LocalDateTime.parse(digits.take(12), radolanTsFmt))
       case _ =>
-        val yy = digits.take(2).toInt
-        val year = if (yy >= 69) 1900 + yy else 2000 + yy
-        val d = java.time.LocalDate.of(year, digits.slice(2, 4).toInt, digits.slice(4, 6).toInt)
+        val d = LocalDate.of(pivotYear(digits.take(2).toInt),
+          digits.slice(2, 4).toInt, digits.slice(4, 6).toInt)
         utcTs(d.atStartOfDay)
     }
   }
 
+  /** The days, first to last, that a grid file or archive name covers, read
+    * from the digits of the name (radohydro.py:64-78, 296-297).
+    *
+    *  - RADOLAN: 8 or more digits are the day `yyyyMMdd` (hourly members,
+    *    daily archives); 6 or 7 are the month `yyyyMM` (monthly archives).
+    *  - REGNIE: 6 or more digits are the day `yyMMdd`, with the %y pivot.
+    *
+    * None when the name carries no valid date; date pruning keeps such a name.
+    */
+  def nameDays(datasource: String, name: String): Option[(LocalDate, LocalDate)] = {
+    val digits = digitsOf(name)
+    def num(from: Int, until: Int): Int = digits.substring(from, until).toInt
+    def month(year: Int, m: Int): Option[YearMonth] =
+      if (m >= 1 && m <= 12) Some(YearMonth.of(year, m)) else None
+    def day(year: Int, m: Int, d: Int): Option[(LocalDate, LocalDate)] =
+      month(year, m).filter(ym => d >= 1 && d <= ym.lengthOfMonth)
+        .map { ym => val day = ym.atDay(d); (day, day) }
+    (datasource, digits.length) match {
+      case ("radolan", n) if n >= 8 => day(num(0, 4), num(4, 6), num(6, 8))
+      case ("radolan", n) if n >= 6 =>
+        month(num(0, 4), num(4, 6)).map(ym => (ym.atDay(1), ym.atEndOfMonth))
+      case ("regnie", n) if n >= 6 => day(pivotYear(num(0, 2)), num(2, 4), num(4, 6))
+      case _ => None
+    }
+  }
+
+  /** Whether a name can hold grids of [start, end] (inclusive days; None =
+    * open): false only when its [[nameDays]] lie wholly outside the range.
+    */
+  def nameInRange(datasource: String, name: String,
+      start: Option[LocalDate], end: Option[LocalDate]): Boolean =
+    nameDays(datasource, name) match {
+      case Some((first, last)) => start.forall(!last.isBefore(_)) && end.forall(!first.isAfter(_))
+      case None => true // no date in the name: each member is checked by its own timestamp
+    }
+
   /** Peek the first grid member in a directory (driver-side, reference X9:
-    * the cell grid derives from the first grid only).
+    * the cell grid derives from the first grid only). Reads only as far as
+    * the first member of the first file.
     */
   def peekFirstGrid(dir: String, datasource: String): GridMeta = {
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty).filter(_.isFile).sortBy(_.getName)
+    // regular files, without the hidden ones (`.`/`_` prefix) that Spark's
+    // file listing skips
+    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .sortBy(_.getName)
     require(files.nonEmpty, s"no grid files in $dir")
     val bytes = java.nio.file.Files.readAllBytes(files.head.toPath)
     val members = Archives.expand(files.head.getName, bytes)
@@ -109,7 +160,7 @@ object RadoHydro {
       val (t, _) = GeoTiff.parse(m.bytes, rowRange = Some((0, 0)))
       GridMeta(t.nrows, t.ncols, Grid.Transform(t.ulx, t.xres, t.uly, t.yres), t.nodata)
     } else {
-      val h = AsciiGrid.parseHeader(new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII))
+      val h = AsciiGrid.parseBytes(m.bytes)._1
       GridMeta(h.nrows, h.ncols, Grid.Transform(h.ulx, h.xres, h.uly, h.yres), h.nodata)
     }
   }
@@ -164,73 +215,52 @@ object RadoHydro {
     val ds = cfg.datasource
     val (rLo, rHi, cLo, cHi) = (win.rowLo, win.rowHi, win.colLo, win.colHi)
     val mask = cfg.maskNodata
+    val (startDay, endDay) = (
+      cfg.startDate.map(LocalDate.parse(_, DateTimeFormatter.BASIC_ISO_DATE)),
+      cfg.endDate.map(LocalDate.parse(_, DateTimeFormatter.BASIC_ISO_DATE)))
     val (startTs, endTs) = (
-      cfg.startDate.map(s => utcTs(LocalDateTime.parse(s + "0000", radolanTsFmt))),
-      cfg.endDate.map(s => utcTs(LocalDateTime.parse(s + "2359", radolanTsFmt))))
+      startDay.map(d => utcTs(d.atStartOfDay)), endDay.map(d => utcTs(d.atTime(23, 59))))
     val bin = spark.read.format("binaryFile").load(gridDir)
       .select("path", "content").as[(String, Array[Byte])]
     val values: Dataset[(Timestamp, Int, Int, java.lang.Double)] = bin.flatMap { case (path, bytes) =>
       val fname = path.substring(path.lastIndexOf('/') + 1)
-      Archives.expand(fname, bytes)
-        .filter { m =>
-          // S4 inter-level pruning (radohydro.py:296-297): skip a nested
-          // daily archive entirely when its name-carried date is out of
-          // range — members are never decompressed. RADOLAN names carry
-          // yyyyMMdd (8 digits); REGNIE daily members carry yyMMdd (6,
-          // Python %y pivot).
-          val digits = m.name.replaceAll("[^0-9]", "")
-          if (startTs.isEmpty && endTs.isEmpty) true
-          else {
-            val day8 =
-              if (digits.length >= 8) Some(digits.take(8))
-              else if (digits.length >= 6) {
-                val yy = digits.take(2).toInt
-                val year = if (yy >= 69) 1900 + yy else 2000 + yy
-                Some(f"$year%04d" + digits.slice(2, 6))
-              } else None
-            day8 match {
-              case None => true
-              case Some(d8) =>
-                try {
-                  val dayStart = utcTs(LocalDateTime.parse(d8 + "0000", radolanTsFmt))
-                  val dayEnd = utcTs(LocalDateTime.parse(d8 + "2359", radolanTsFmt))
-                  startTs.forall(!dayEnd.before(_)) && endTs.forall(!dayStart.after(_))
-                } catch { case _: Exception => true }
-            }
-          }
-        }
+      // P1 (radohydro.py:296-297): a file whose name-carried date is out of
+      // range is not expanded
+      if (!nameInRange(ds, fname, startDay, endDay)) Iterator.empty
+      else Archives.expand(fname, bytes)
+        // S4 inter-level pruning: a nested daily archive out of range is
+        // skipped before it is inflated
+        .filter(m => nameInRange(ds, m.name, startDay, endDay))
         .flatMap(m => Archives.expand(m.name, m.bytes))
         .flatMap { m =>
           val ts = parseMemberTs(ds, m.name)
           val inRange = startTs.forall(!ts.before(_)) && endTs.forall(!ts.after(_))
           if (!inRange) Iterator.empty
-          else {
+          else if (ds == "regnie") {
             val text = new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII)
-            if (ds == "regnie") {
-              Regnie.parseFile(text, keepNodata = true,
-                  rowRange = Some((rLo, rHi))).flatMap { c =>
-                if (c.col < cLo || c.col >= cHi) Iterator.empty
-                else {
-                  val v: java.lang.Double =
-                    if (c.value.isNaN) { if (mask) null else java.lang.Double.valueOf(Regnie.Nodata.toDouble) }
-                    else java.lang.Double.valueOf(c.value)
-                  Iterator.single((ts, c.row - rLo, c.col - cLo, v))
-                }
-              }
-            } else if (isTiff(m.name)) {
-              val (t, cells) = GeoTiff.parse(m.bytes, Some((rLo, rHi)), Some((cLo, cHi)))
-              cells.map { c =>
+            Regnie.parseFile(text, keepNodata = true,
+                rowRange = Some((rLo, rHi))).flatMap { c =>
+              if (c.col < cLo || c.col >= cHi) Iterator.empty
+              else {
                 val v: java.lang.Double =
-                  if (mask && c.value == t.nodata) null else java.lang.Double.valueOf(c.value)
-                (ts, c.row - rLo, c.col - cLo, v)
+                  if (c.value.isNaN) { if (mask) null else java.lang.Double.valueOf(Regnie.Nodata.toDouble) }
+                  else java.lang.Double.valueOf(c.value)
+                Iterator.single((ts, c.row - rLo, c.col - cLo, v))
               }
-            } else {
-              val (h, cells) = AsciiGrid.parse(text, Some((rLo, rHi)), Some((cLo, cHi)))
-              cells.map { c =>
-                val v: java.lang.Double =
-                  if (mask && c.value == h.nodata) null else java.lang.Double.valueOf(c.value)
-                (ts, c.row - rLo, c.col - cLo, v)
-              }
+            }
+          } else if (isTiff(m.name)) {
+            val (t, cells) = GeoTiff.parse(m.bytes, Some((rLo, rHi)), Some((cLo, cHi)))
+            cells.map { c =>
+              val v: java.lang.Double =
+                if (mask && c.value == t.nodata) null else java.lang.Double.valueOf(c.value)
+              (ts, c.row - rLo, c.col - cLo, v)
+            }
+          } else {
+            val (h, cells) = AsciiGrid.parseBytes(m.bytes, Some((rLo, rHi)), Some((cLo, cHi)))
+            cells.map { c =>
+              val v: java.lang.Double =
+                if (mask && c.value == h.nodata) null else java.lang.Double.valueOf(c.value)
+              (ts, c.row - rLo, c.col - cLo, v)
             }
           }
         }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream, OutputStream}
 import java.util.zip.GZIPInputStream
 
 /** Archive expansion (SURVEY S3–S5): tar / tar.gz / gz member extraction as
@@ -16,71 +16,99 @@ object Archives {
 
   final case class Member(name: String, bytes: Array[Byte])
 
-  private def readAll(in: InputStream): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
+  private def gunzipStream(bytes: Array[Byte]): InputStream =
+    new GZIPInputStream(new ByteArrayInputStream(bytes), 64 * 1024)
 
-  def gunzip(bytes: Array[Byte]): Array[Byte] =
-    readAll(new GZIPInputStream(new ByteArrayInputStream(bytes)))
+  def gunzip(bytes: Array[Byte]): Array[Byte] = gunzipStream(bytes).readAllBytes()
 
   private def isGzip(bytes: Array[Byte]): Boolean =
     bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b
 
-  /** Iterate regular-file members of a tar archive (plain or gzipped). */
-  def untar(raw: Array[Byte]): Iterator[Member] = {
-    val bytes = if (isGzip(raw)) gunzip(raw) else raw
-    new Iterator[Member] {
-      private var off = 0
-      private var nextMember: Member = null
-      advance()
+  private def parseOctal(b: Array[Byte], start: Int, len: Int): Long = {
+    var v = 0L; var i = start
+    val end = start + len
+    while (i < end) {
+      val c = b(i)
+      if (c >= '0' && c <= '7') v = (v << 3) + (c - '0')
+      i += 1
+    }
+    v
+  }
 
-      private def parseOctal(b: Array[Byte], start: Int, len: Int): Long = {
-        var v = 0L; var i = start
-        val end = start + len
-        while (i < end) {
-          val c = b(i)
-          if (c >= '0' && c <= '7') v = (v << 3) + (c - '0')
-          i += 1
+  /** Iterate regular-file members of a tar archive (plain or gzipped).
+    *
+    * Streams: a `.tar.gz` is inflated member by member as the iterator is
+    * advanced, and each member gets an array of exactly its own size — the
+    * whole tar is never held in memory, and a consumer that stops after the
+    * first member never inflates (or validates) the rest. A consumer that
+    * reaches the end reads the whole stream, so a `.tar.gz` whose gzip CRC
+    * or size trailer does not match throws `ZipException`.
+    */
+  def untar(raw: Array[Byte]): Iterator[Member] = {
+    val gzipped = isGzip(raw)
+    val in = if (gzipped) gunzipStream(raw) else new ByteArrayInputStream(raw)
+    // the most bytes a member can hold: deflate expands at most 1032:1
+    val maxMember = math.min(if (gzipped) raw.length * 1032L else raw.length.toLong,
+      Int.MaxValue.toLong)
+    new Iterator[Member] {
+      private val header = new Array[Byte](512)
+      private var nextMember: Member = null
+      private var fetched = false
+
+      /** Skip up to `n` bytes; a stream that ends early just ends the archive. */
+      private def skipUpTo(n: Long): Unit = {
+        var left = n
+        while (left > 0) {
+          val k = in.skip(left)
+          if (k <= 0) return
+          left -= k
         }
-        v
       }
 
       @annotation.tailrec
-      private def advance(): Unit = {
-        nextMember = null
-        if (off + 512 > bytes.length) return
-        // all-zero block = end of archive
-        var allZero = true
-        var i = off
-        while (allZero && i < off + 512) { if (bytes(i) != 0) allZero = false; i += 1 }
-        if (allZero) return
+      private def readNext(): Member = {
+        // a short or all-zero header block = end of archive; read the stream
+        // to its end anyway, so that GZIPInputStream checks the CRC and size
+        // trailer of a .tar.gz
+        if (in.readNBytes(header, 0, 512) < 512 || header.forall(_ == 0)) {
+          in.transferTo(OutputStream.nullOutputStream())
+          return null
+        }
         val nameEnd = {
-          var e = off
-          while (e < off + 100 && bytes(e) != 0) e += 1
+          var e = 0
+          while (e < 100 && header(e) != 0) e += 1
           e
         }
-        val name = new String(bytes, off, nameEnd - off, "US-ASCII")
-        val size = parseOctal(bytes, off + 124, 12)
-        val typeFlag = bytes(off + 156).toChar
-        val dataStart = off + 512
-        val padded = ((size + 511) / 512) * 512
-        off = dataStart + padded.toInt
+        val name = new String(header, 0, nameEnd, "US-ASCII")
+        val size = parseOctal(header, 124, 12)
+        val typeFlag = header(156).toChar
+        val pad = (512 - size % 512) % 512
         if (typeFlag == '0' || typeFlag == 0.toChar) {
-          // copyOfRange would silently ZERO-PAD past the end of a truncated
-          // archive — fail loudly instead of fabricating member bytes
-          require(dataStart + size <= bytes.length,
+          // the size field is unchecked input: bound it before allocating
+          require(size <= maxMember,
+            s"tar: member '$name' claims $size bytes, more than the archive can hold (truncated or corrupt)")
+          val bytes = new Array[Byte](size.toInt)
+          // a short read would otherwise leave the member's tail zero-filled:
+          // fail loudly instead of fabricating member bytes
+          require(in.readNBytes(bytes, 0, bytes.length) == bytes.length,
             s"tar: member '$name' claims ${size} bytes but archive is truncated")
-          nextMember = Member(name, java.util.Arrays.copyOfRange(bytes, dataStart, dataStart + size.toInt))
-        } else advance()
+          skipUpTo(pad)
+          Member(name, bytes)
+        } else {
+          skipUpTo(size + pad)
+          readNext()
+        }
       }
 
-      def hasNext: Boolean = nextMember != null
+      def hasNext: Boolean = {
+        if (!fetched) { nextMember = readNext(); fetched = true }
+        nextMember != null
+      }
+
       def next(): Member = {
-        val m = nextMember; advance(); m
+        if (!hasNext) throw new NoSuchElementException("tar: no more members")
+        fetched = false
+        nextMember
       }
     }
   }

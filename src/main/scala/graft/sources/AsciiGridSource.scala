@@ -25,7 +25,7 @@ import graft.api.RadoHydro
   *
   * Schema: (ts timestamp, row int, col int, value double). Timestamps parse
   * from member-name digits (radohydro.py:64-78). Comparison filters on
-  * row/col tighten the parse window INSIDE the text parser (rows outside are
+  * row/col tighten the parse window INSIDE the byte parser (rows outside are
   * skipped without number parsing); ts and value filters evaluate post-scan
   * (returned as residuals). One input partition per file — at 100 TB the
   * unit of parallelism is the daily archive, which is how DWD shards the
@@ -145,8 +145,7 @@ class AsciiGridPartitionReader(path: String, datasource: String,
       .flatMap { m =>
         val ts = RadoHydro.parseMemberTs(datasource, m.name)
         val tsMicros = ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
-        val text = new String(m.bytes, java.nio.charset.StandardCharsets.US_ASCII)
-        val (_, cells) = AsciiGrid.parse(text,
+        val (_, cells) = AsciiGrid.parseBytes(m.bytes,
           Some((rowLo, if (rowHi == Int.MaxValue) Int.MaxValue else rowHi + 1)),
           Some((colLo, if (colHi == Int.MaxValue) Int.MaxValue else colHi + 1)))
         cells.map(c => InternalRow(tsMicros, c.row, c.col, c.value))

@@ -49,7 +49,8 @@ class RasterizeSpec extends AnyFunSuite {
       .toDF("ord", "attr", "geom")
     val cells = Rasterize.rasterize(polys, t, 4, 4)
     val txt = Rasterize.toAsciiGrid(cells, t, 4, 4)
-    val (h, parsed) = graft.ingest.AsciiGrid.parse(txt)
+    val (h, parsed) = graft.ingest.AsciiGrid.parseBytes(txt.getBytes(
+      java.nio.charset.StandardCharsets.US_ASCII))
     assert(h.nrows == 4 && h.ncols == 4 && h.nodata == -9999)
     assert(parsed.count(_.value == 5.0) == 16)
   }

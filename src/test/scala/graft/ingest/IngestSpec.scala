@@ -1,5 +1,7 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets.US_ASCII
+
 import org.scalatest.funsuite.AnyFunSuite
 import graft.geo.Geom
 
@@ -17,7 +19,7 @@ class AsciiGridSpec extends AnyFunSuite {
       |""".stripMargin
 
   test("header parse + derived transform") {
-    val h = AsciiGrid.parseHeader(fixture)
+    val h = AsciiGrid.parseBytes(fixture.getBytes(US_ASCII))._1
     assert(h.ncols == 3 && h.nrows == 3)
     assert(h.ulx == 100.0 && h.uly == 230.0)
     assert(h.xres == 10.0 && h.yres == -10.0)
@@ -25,7 +27,7 @@ class AsciiGridSpec extends AnyFunSuite {
   }
 
   test("full parse row-major from north") {
-    val (_, cells) = AsciiGrid.parse(fixture)
+    val (_, cells) = AsciiGrid.parseBytes(fixture.getBytes(US_ASCII))
     val m = cells.toSeq
     assert(m.size == 9)
     assert(m.head == AsciiGrid.Cell(0, 0, 1.0)) // north-west corner
@@ -33,42 +35,58 @@ class AsciiGridSpec extends AnyFunSuite {
   }
 
   test("window pushdown prunes rows and cols at parse time") {
-    val (_, cells) = AsciiGrid.parse(fixture, rowRange = Some((1, 3)), colRange = Some((0, 2)))
+    val (_, cells) = AsciiGrid.parseBytes(fixture.getBytes(US_ASCII),
+      rowRange = Some((1, 3)), colRange = Some((0, 2)))
     val m = cells.toSeq
     assert(m.map(_.value) == Seq(4.0, 5.0, 7.0, 8.0))
   }
 
   test("whitespace-only trailing line is ignored, not parsed as a data row") {
-    val (_, cells) = AsciiGrid.parse(fixture + "   \n")
+    val (_, cells) = AsciiGrid.parseBytes((fixture + "   \n").getBytes(US_ASCII))
     assert(cells.size == 9)
   }
 
   test("render round-trips") {
     val h = AsciiGrid.Header(3, 3, 100, 200, 10, -1)
     val txt = AsciiGrid.render(h, Array(Array(1, 2, 3), Array(4, 5, 6), Array(7, 8, 9)))
-    val (h2, cells) = AsciiGrid.parse(txt)
+    val (h2, cells) = AsciiGrid.parseBytes(txt.getBytes(US_ASCII))
     assert(h2 == h)
     assert(cells.size == 9)
   }
 }
 
 class ArchivesSpec extends AnyFunSuite {
+  private def gz(b: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.util.zip.GZIPOutputStream(bos)
+    out.write(b); out.close(); bos.toByteArray
+  }
+
+  /** A tar of `members` in which member `i`'s header says type `flag`. */
+  private def tarWithType(members: Seq[Archives.Member], i: Int, flag: Char): Array[Byte] = {
+    val t = Archives.tar(members)
+    val off = members.take(i).map(m => 512 + (m.bytes.length + 511) / 512 * 512).sum
+    t(off + 156) = flag.toByte
+    t
+  }
+
   test("tar round-trip with padding and multiple members") {
     val members = Seq(
       Archives.Member("a-20180101_0050.asc", "hello grid".getBytes),
       Archives.Member("b-20180101_0150.asc", Array.fill[Byte](513)(7)),
-      Archives.Member("c.txt", Array.emptyByteArray))
-    val out = Archives.untar(Archives.tar(members)).toSeq
-    assert(out.map(_.name) == members.map(_.name))
-    assert(out.zip(members).forall { case (a, b) => a.bytes.sameElements(b.bytes) })
+      Archives.Member("c.txt", Array.emptyByteArray),
+      Archives.Member("d.asc", Array.tabulate[Byte](1024)(i => (i % 251).toByte)))
+    val plain = Archives.tar(members)
+    for (raw <- Seq(plain, gz(plain))) {
+      val out = Archives.untar(raw).toSeq
+      assert(out.map(_.name) == members.map(_.name))
+      assert(out.zip(members).forall { case (a, b) => a.bytes.sameElements(b.bytes) })
+    }
   }
 
   test("gzip detection and decode") {
     val raw = "regnie line data".getBytes
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(raw); gz.close()
-    val got = Archives.expand("ra180101.gz", bos.toByteArray).toSeq
+    val got = Archives.expand("ra180101.gz", gz(raw)).toSeq
     assert(got.size == 1 && got.head.name == "ra180101")
     assert(got.head.bytes.sameElements(raw))
   }
@@ -77,13 +95,61 @@ class ArchivesSpec extends AnyFunSuite {
     val full = Archives.tar(Seq(
       Archives.Member("grid.asc", Array.fill[Byte](1024)(5))))
     val truncated = java.util.Arrays.copyOf(full, 700) // header + partial data
-    val e = intercept[IllegalArgumentException](Archives.untar(truncated).toSeq)
-    assert(e.getMessage.contains("truncated"))
+    // a size field larger than the archive can hold fails before allocating
+    val oversized = Seq("7777777777 ", "77777777777").map { field => // 1 GiB - 1, 8 GiB - 1
+      val bad = full.clone()
+      System.arraycopy(field.getBytes("US-ASCII"), 0, bad, 124, 11)
+      bad
+    }
+    for (raw <- Seq(truncated, gz(truncated))) {
+      val e = intercept[IllegalArgumentException](Archives.untar(raw).toSeq)
+      assert(e.getMessage.contains("truncated"))
+    }
+    for (raw <- oversized.flatMap(t => Seq(t, gz(t)))) {
+      val e = intercept[IllegalArgumentException](Archives.untar(raw).toSeq)
+      assert(e.getMessage.contains("more than the archive can hold"))
+    }
   }
 
   test("corrupt gzip surfaces a zip exception, not garbage members") {
     val bad = Array[Byte](0x1f, 0x8b.toByte, 1, 2, 3, 4, 5, 6, 7, 8)
     intercept[java.util.zip.ZipException](Archives.expand("x.gz", bad).toSeq)
+    // valid gzip header, corrupt deflate data
+    val badData = Array[Byte](0x1f, 0x8b.toByte, 8, 0, 0, 0, 0, 0, 0, 3, 1, 2, 3, 4, 5, 6, 7, 8)
+    intercept[java.util.zip.ZipException](Archives.expand("x.tar.gz", badData).toSeq)
+    // a .tar.gz whose CRC32 trailer does not match, read to its end
+    val good = gz(Archives.tar(Seq(Archives.Member("grid.asc", "1 2 3".getBytes))))
+    assert(Archives.untar(good).map(_.name).toSeq == Seq("grid.asc"))
+    val badCrc = good.clone()
+    badCrc(badCrc.length - 8) = (badCrc(badCrc.length - 8) ^ 1).toByte
+    intercept[java.util.zip.ZipException](Archives.expand("x.tar.gz", badCrc).toSeq)
+  }
+
+  test("non-regular tar entries are skipped, with or without data") {
+    val members = Seq(
+      Archives.Member("dir/", Array.emptyByteArray),
+      Archives.Member("pax", Array.fill[Byte](700)(1)),
+      Archives.Member("grid.asc", "1 2".getBytes))
+    val both = tarWithType(members, 1, 'x')
+    both(156) = '5'.toByte
+    for (raw <- Seq(both, gz(both)))
+      assert(Archives.untar(raw).map(_.name).toSeq == Seq("grid.asc"))
+  }
+
+  test("peekFirstGrid reads only the first member: a truncated second member does not fail it") {
+    val h = AsciiGrid.Header(4, 3, 1000, 2000, 1000, -1)
+    val first = AsciiGrid.render(h, Array.fill(3, 4)(1.0)).getBytes
+    val full = Archives.tar(Seq(
+      Archives.Member("RW_20060101_0050.asc", first),
+      Archives.Member("RW_20060101_0150.asc", Array.fill[Byte](2048)('7'))))
+    // the first member whole, the second header, and 100 of its 2048 bytes
+    val cut = gz(java.util.Arrays.copyOf(full, 512 + (first.length + 511) / 512 * 512 + 512 + 100))
+    intercept[IllegalArgumentException](Archives.untar(cut).toSeq)
+    val dir = java.nio.file.Files.createTempDirectory("peek")
+    java.nio.file.Files.write(dir.resolve("RW-20060101.tar.gz"), cut)
+    val meta = graft.api.RadoHydro.peekFirstGrid(dir.toString, "radolan")
+    assert((meta.nrows, meta.ncols, meta.nodata) == ((3, 4, -1.0)))
+    assert(meta.t.ulx == 1000.0 && meta.t.uly == 5000.0)
   }
 
   test("nested tar (monthly of daily) expands with two passes") {
@@ -93,6 +159,15 @@ class ArchivesSpec extends AnyFunSuite {
     assert(level1.map(_.name) == Seq("d1.tar"))
     val level2 = level1.flatMap(m => Archives.expand(m.name, m.bytes))
     assert(level2.map(_.name) == Seq("h1.asc"))
+    // the RADOLAN layout: a plain monthly tar of gzipped daily tars
+    val dailies = (1 to 2).map(d => Archives.Member(s"RW-2006010$d.tar.gz", gz(Archives.tar(Seq(
+      Archives.Member(s"RW_2006010${d}_0050.asc", s"day $d".getBytes),
+      Archives.Member(s"RW_2006010${d}_0150.asc", Array.fill[Byte](512)(d.toByte)))))))
+    val hourly = Archives.expand("RW-200601.tar", Archives.tar(dailies))
+      .flatMap(m => Archives.expand(m.name, m.bytes)).toSeq
+    assert(hourly.map(_.name) == Seq("RW_20060101_0050.asc", "RW_20060101_0150.asc",
+      "RW_20060102_0050.asc", "RW_20060102_0150.asc"))
+    assert(new String(hourly(2).bytes) == "day 2" && hourly(3).bytes.forall(_ == 2))
   }
 }
 
